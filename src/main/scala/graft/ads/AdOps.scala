@@ -46,18 +46,16 @@ object AdOps {
       .distinct().collect().map(_.getString(0)).toSeq.sorted
 
   /** P2 + V1 pass 2: nested record → flat wide row in ONE row-local
-    * projection — no shuffle, no aggregate. `map_from_entries` keeps the
-    * reference's per-row overwrite semantics (`main.py:389-391`: later
-    * entries win per key) via map key collision behavior, and missing
-    * actions zero-fill (`main.py:383-386`).
+    * projection — no shuffle, no aggregate. Each action column takes the
+    * LAST entry of its type, keeping the reference's per-row overwrite
+    * semantics (`main.py:389-391`: dict assignment, later entries win per
+    * key) without touching session conf, and missing actions zero-fill
+    * (`main.py:383-386`).
     *
     * Scale: this is a narrow map over the scan — whole-stage codegen'd,
     * partition-count preserving, embarrassingly parallel at any SF.
     */
   def flattenAndPivot(raw: DataFrame, actionTypes: Seq[String]): DataFrame = {
-    // Reference semantics: a duplicated action_type within one record is
-    // overwritten by the later entry (dict assignment, main.py:389-391).
-    raw.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
     val base = Seq(
       col("campaign_name"),
       col("ad_name"),
@@ -77,12 +75,12 @@ object AdOps {
       extractMetric(col("video_p50_watched_actions")).as("video_p50_views"),
       extractMetric(col("video_p75_watched_actions")).as("video_p75_views"),
       extractMetric(col("video_p100_watched_actions")).as("video_p100_views"))
-    val actionMap = map_from_entries(
-      when(col("actions").isNull, array())
-        .otherwise(expr("transform(actions, a -> struct(a.action_type AS k, a.value AS v))")))
+    def lastValue(t: String): Column =
+      try_element_at(filter(col("actions"), _.getField("action_type") === t), lit(-1))
+        .getField("value")
     val actionCols = actionTypes.map { t =>
-      coalesce(numericOrNull(try_element_at(actionMap, lit(t)), "^-?[0-9]+$")
-        .cast("long"), lit(0L)).as(normalizeActionName(t))
+      coalesce(numericOrNull(lastValue(t), "^-?[0-9]+$").cast("long"), lit(0L))
+        .as(normalizeActionName(t))
     }
     raw.select(base ++ actionCols: _*)
   }

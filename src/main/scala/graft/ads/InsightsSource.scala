@@ -1,29 +1,35 @@
 package graft.ads
 
-import scala.util.{Failure, Success, Try}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.InsightsV2Source
+
 /** Fixture-backed insights source (reference `main.py:262-342`,
   * `backfill.py:49-119`). The environment is zero-egress, so the remote API
-  * is modeled as JSON-lines files — one `account_<id>.jsonl` per ad account —
-  * read with the declared nested schema (no inference: the API contract is
-  * the schema).
+  * is modeled as JSON-lines files per ad account — `account_<id>.jsonl`, or
+  * the paged form `account_<id>.page1.jsonl`, `.page2.jsonl`, … — read by the
+  * DataSource V2 reader [[graft.sources.InsightsV2Source]] with the declared
+  * nested schema (no inference: the API contract is the schema). That reader
+  * walks the pages, retries transient failures, classifies API error bodies,
+  * and runs each account as its own partition on executors.
   *
   * Semantics carried over from the reference:
-  *  - per-account failure isolation (`main.py:471-498`): a missing/broken
-  *    account is recorded and skipped; only if ALL accounts fail does the
-  *    read raise;
+  *  - per-account failure isolation (`main.py:471-498`): an account with no
+  *    landed file is recorded and skipped (checked on the driver before the
+  *    scan); only if ALL accounts fail does the read raise;
   *  - explicit ingest order: (account list position, ingest_idx within the
   *    account's page stream) — the deterministic replacement for the
   *    reference's Python arrival order;
-  *  - optional date-range options (`backfill.py:82-83`) applied as a
-  *    pushed-down filter (Catalyst collapses it into the scan).
+  *  - optional date-range options (`backfill.py:82-83`) applied as plain
+  *    filters that Catalyst pushes into the reader.
   *
-  * Scale: one file per account here; at 100 TB this is the same code over a
-  * partitioned landing zone (`.../account=<id>/date=<d>/` jsonl files), where the
-  * account/date predicates become partition pruning.
+  * An unparseable line reads as a row of null raw columns (with its lineage
+  * columns set), which the sink's REQUIRED check then rejects.
+  *
+  * Scale: one file stream per account here; at 100 TB this is the same code
+  * over a partitioned landing zone (`.../account=<id>/date=<d>/` jsonl files),
+  * where the account/date predicates become partition pruning.
   */
 object InsightsSource {
 
@@ -36,44 +42,12 @@ object InsightsSource {
       dateStart: Option[String] = None,
       dateStop: Option[String] = None): ReadResult = {
     require(accounts.nonEmpty, "at least one account required")
-    val attempts = accounts.zipWithIndex.map { case (acct, idx) =>
-      acct -> Try {
-        val df = spark.read.schema(AdSchema.rawSchema)
-          .json(s"$fixtureDir/account_$acct.jsonl")
-        // Invalid path surfaces lazily in some layouts; force file check now.
-        require(new java.io.File(s"$fixtureDir/account_$acct.jsonl").exists(),
-          s"fixture for account $acct not found")
-        df.withColumn("account_id", lit(acct))
-          .withColumn("account_idx", lit(idx))
-      }
+    val failures = accounts.filterNot(InsightsV2Source.landed(fixtureDir, _)).map { a =>
+      a -> s"no account_$a.jsonl or account_$a.page1.jsonl in $fixtureDir"
     }
-    val failures = attempts.collect { case (a, Failure(e)) => a -> e.getMessage }
-    val oks = attempts.collect { case (_, Success(df)) => df }
-    if (oks.isEmpty)
+    if (failures.size == accounts.size)
       throw new IllegalStateException(
         s"all ${accounts.size} accounts failed: ${failures.map(_._1).mkString(", ")}")
-    val unioned = oks.reduce(_ unionByName _)
-    val ranged = (dateStart, dateStop) match {
-      case (Some(s0), Some(s1)) => unioned.filter(col("date_start").between(s0, s1))
-      case (Some(s0), None)     => unioned.filter(col("date_start") >= s0)
-      case (None, Some(s1))     => unioned.filter(col("date_start") <= s1)
-      case _                    => unioned
-    }
-    ReadResult(ranged, failures)
-  }
-
-  /** DataSource V2 path (graft.sources.InsightsV2Source): one partition per
-    * account on executors, with column pruning and date-filter pushdown into
-    * the reader. Same rows as [[read]]; this is the form that scales past
-    * driver memory. Date predicates are plain filters here — Catalyst pushes
-    * them into the source (see InsightsV2SourceSpec's plan assertion).
-    */
-  def readV2(
-      spark: SparkSession,
-      fixtureDir: String,
-      accounts: Seq[String],
-      dateStart: Option[String] = None,
-      dateStop: Option[String] = None): DataFrame = {
     val df = spark.read.format("graft.sources.InsightsV2Source")
       .option("path", fixtureDir)
       .option("accounts", accounts.mkString(","))
@@ -84,6 +58,6 @@ object InsightsSource {
       case (None, Some(s1))     => df.filter(col("date_start") <= s1)
       case _                    => df
     }
-    ranged
+    ReadResult(ranged, failures)
   }
 }

@@ -10,11 +10,13 @@ final case class JobResult(status: String, message: String, rowsProcessed: Long)
 
 object Pipelines {
 
-  /** Daily sync (reference `main.py:454-550`): fetch per account with
-    * failure isolation → first-wins dedup on RAW records → collect action
+  /** Daily sync (reference `main.py:454-550`): fetch per account through
+    * [[InsightsSource.read]] (paged DSv2 reader, retries, a missing account
+    * recorded and skipped) → first-wins dedup on RAW records → collect action
     * types → flatten+pivot → CSV audit → append to day-partitioned table
     * (schema-evolving). `dryRun` builds and audits but skips the table sink
-    * (reference `main.py:462,538-540`).
+    * (reference `main.py:462,538-540`). A fatal API error body fails the
+    * sync with [[graft.sources.AdsApiError]].
     */
   def dailySync(
       spark: SparkSession,
@@ -22,17 +24,8 @@ object Pipelines {
       accounts: Seq[String],
       tablePath: String,
       auditCsvPath: String,
-      dryRun: Boolean = false,
-      useV2Source: Boolean = false): JobResult = {
-    // V2 = the paginated executor-side DSv2 reader (retries, error taxonomy,
-    // page-cursor walk); the driver-side reader keeps per-account failure
-    // isolation, which DSv2 partitions intentionally don't (a failed account
-    // fails the scan).
-    val read =
-      if (useV2Source)
-        InsightsSource.ReadResult(
-          InsightsSource.readV2(spark, fixtureDir, accounts), Seq.empty)
-      else InsightsSource.read(spark, fixtureDir, accounts)
+      dryRun: Boolean = false): JobResult = {
+    val read = InsightsSource.read(spark, fixtureDir, accounts)
     val deduped = AdOps.dedupFirstWins(read.data)
     val actionTypes = AdOps.collectActionTypes(deduped)
     val flat = AdOps.flattenAndPivot(deduped, actionTypes)

@@ -1,6 +1,6 @@
 package graft.ads
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Outcome of a checked table append: rows written, rows rejected by
@@ -57,25 +57,34 @@ object Sinks {
       val sample =
         if (rejected == 0) Seq.empty
         else {
-          val ident = required.map(c => concat(lit(s"$c="), coalesce(col(c), lit("NULL"))))
+          // cast first: a CSV-inferred DATE column cannot coalesce with 'NULL'
+          // under ANSI mode
+          val ident = required.map(c =>
+            concat(lit(s"$c="), coalesce(col(c).cast("string"), lit("NULL"))))
           bad.select(concat(lit("row["), concat_ws(", ", ident: _*), lit("]: "),
               col("_row_errors")).as("e"))
             .limit(maxErrorSample).collect().map(_.getString(0)).toSeq
         }
       errorPath.foreach(p => bad.write.mode("append").parquet(p))
-      AppendResult(appendAligned(spark, good, path), rejected, sample)
+      AppendResult(writeAligned(spark, good, path, SaveMode.Append), rejected, sample)
     } finally marked.unpersist(): Unit
   }
 
-  /** Evolution-aware physical append of pre-validated rows. */
-  private def appendAligned(spark: SparkSession, flat: DataFrame, path: String): Long = {
+  /** Evolution-aware physical write of pre-validated rows: derive `p_date`,
+    * align to merge(existing, incoming), count, write. Overwrite is dynamic
+    * (only the batch's partitions), set on the writer so the session conf
+    * is left alone.
+    */
+  private def writeAligned(
+      spark: SparkSession, flat: DataFrame, path: String, mode: SaveMode): Long = {
     val withDate = flat.withColumn("p_date", to_date(col("date_start"), "yyyy-MM-dd"))
     val target = SchemaEvolution.tableSchema(spark, path)
       .map(SchemaEvolution.merge(_, withDate.schema))
       .getOrElse(withDate.schema)
     val aligned = SchemaEvolution.alignTo(withDate, target)
     val n = aligned.count()
-    aligned.write.mode("append").partitionBy("p_date").parquet(path)
+    aligned.write.mode(mode).option("partitionOverwriteMode", "dynamic")
+      .partitionBy("p_date").parquet(path)
     n
   }
 
@@ -84,17 +93,8 @@ object Sinks {
     * max-instances=1 + manual `SELECT DISTINCT` remediation
     * (`README.md:377-385`). Re-running a day is then safe by construction.
     */
-  def overwritePartitions(spark: SparkSession, flat: DataFrame, path: String): Long = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val withDate = flat.withColumn("p_date", to_date(col("date_start"), "yyyy-MM-dd"))
-    val target = SchemaEvolution.tableSchema(spark, path)
-      .map(SchemaEvolution.merge(_, withDate.schema))
-      .getOrElse(withDate.schema)
-    val aligned = SchemaEvolution.alignTo(withDate, target)
-    val n = aligned.count()
-    aligned.write.mode("overwrite").partitionBy("p_date").parquet(path)
-    n
-  }
+  def overwritePartitions(spark: SparkSession, flat: DataFrame, path: String): Long =
+    writeAligned(spark, flat, path, SaveMode.Overwrite)
 
   /** Table read with footer-merged schema (evolution-aware). */
   def readTable(spark: SparkSession, path: String): DataFrame =
@@ -120,7 +120,6 @@ object Sinks {
     val before = dataFiles
     val totalBytes = before.map(_.length()).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val df = readTable(spark, path)
     // repartition by the partition column so each day writes nFiles max,
     // and rows of one day land together (one writer per (day, slot))
@@ -129,7 +128,7 @@ object Sinks {
       else df.repartition(nFiles)
     val out = compacted.cache()
     out.count() // materialize BEFORE overwriting the files being read
-    out.write.mode("overwrite")
+    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .applyPartitioning(df.columns.contains("p_date"))
       .parquet(path)
     out.unpersist()

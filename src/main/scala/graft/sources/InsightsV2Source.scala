@@ -3,8 +3,10 @@ package graft.sources
 import java.util
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.MissingNode
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -20,9 +22,11 @@ import graft.ads.AdSchema
 
 /** DataSource V2 implementation of the insights source (reference
   * `main.py:262-342`): the productionized form of S1/S2, where the fixture
-  * jsonl files stand in for the paginated HTTP API.
+  * jsonl files stand in for the paginated HTTP API. It is the only insights
+  * reader; [[graft.ads.InsightsSource.read]] wraps it with the driver-side
+  * per-account failure isolation (U1).
   *
-  * Spark-native properties the driver-fetch variant lacks:
+  * Properties:
   *  - one InputPartition PER ACCOUNT → accounts fetch in parallel on
   *    executors, never accumulating on the driver (the reference
   *    materializes everything in one process, `main.py:473-480`);
@@ -33,7 +37,10 @@ import graft.ads.AdSchema
   *    rows are skipped inside the reader, mirroring the API-side date
   *    predicate (`backfill.py:82-83`);
   *  - explicit ingest order: (account_idx, line number) stamped per row, the
-  *    deterministic arrival order first-wins dedup needs.
+  *    deterministic arrival order first-wins dedup needs;
+  *  - PERMISSIVE lines: a line that does not parse reads as a row of null
+  *    raw columns with its lineage columns set, as Spark's JSON reader does,
+  *    so one bad line is a rejected row rather than a failed scan.
   *
   * Usage:
   * {{{
@@ -60,6 +67,18 @@ object InsightsV2Source {
     AdSchema.rawSchema.fields.toSeq ++ Seq(
       StructField("account_id", StringType),
       StructField("account_idx", IntegerType)))
+
+  /** Single-page landing file of one account. */
+  def singleFile(path: String, account: String): java.io.File =
+    new java.io.File(s"$path/account_$account.jsonl")
+
+  /** Page `n` (from 1) of one account's paged landing files. */
+  def pageFile(path: String, account: String, n: Int): java.io.File =
+    new java.io.File(s"$path/account_$account.page$n.jsonl")
+
+  /** True when the account has landed data in either form. */
+  def landed(path: String, account: String): Boolean =
+    singleFile(path, account).exists() || pageFile(path, account, 1).exists()
 }
 
 /** Error taxonomy of the insights API (reference `main.py:305-339`): body
@@ -126,8 +145,9 @@ private class InsightsScanBuilder(path: String, accounts: Seq[String])
     override def description(): String =
       s"InsightsScan PushedFilters: ${dateFilters.mkString("[", ", ", "]")}, " +
         s"ReadSchema: ${requiredSchema.simpleString}"
+    // an account with no landed file gets no task; idx stays its list position
     override def planInputPartitions(): Array[InputPartition] =
-      accounts.zipWithIndex
+      accounts.zipWithIndex.filter { case (a, _) => InsightsV2Source.landed(path, a) }
         .map { case (a, i) => AccountPartition(path, a, i): InputPartition }.toArray
     override def createReaderFactory(): PartitionReaderFactory =
       new InsightsReaderFactory(requiredSchema, dateFilters)
@@ -159,10 +179,11 @@ private class InsightsReaderFactory(schema: StructType, dateFilters: Array[Filte
   *    inject them via a `.transient` counter file consumed one failure per
   *    attempt. In the HTTP form each attempt would also carry the 30 s
   *    request timeout.
-  *  - ERROR TAXONOMY: a page whose first record is `{"error": {...}}` is an
-  *    API error body; codes 190/104 (token) and 401/403 (auth) raise
+  *  - ERROR TAXONOMY: a page whose first record parses as `{"error": {...}}`
+  *    is an API error body; codes 190/104 (token) and 401/403 (auth) raise
   *    [[AdsApiError]] immediately without retry — retrying an expired token
-  *    cannot succeed (`main.py:305-311, 333-339`).
+  *    cannot succeed (`main.py:305-311, 333-339`). A first line that does
+  *    not parse is data, not an error body: it reads as a null row.
   *
   * Memory is constant per page either way; rows stream line-at-a-time.
   */
@@ -173,8 +194,8 @@ private class InsightsPartitionReader(
   private val mapper = new ObjectMapper()
   private val maxRetries = 3
 
-  private val singleFile = new java.io.File(s"${p.path}/account_${p.account}.jsonl")
-  private def pageFile(n: Int) = new java.io.File(s"${p.path}/account_${p.account}.page$n.jsonl")
+  private val singleFile = InsightsV2Source.singleFile(p.path, p.account)
+  private def pageFile(n: Int) = InsightsV2Source.pageFile(p.path, p.account, n)
 
   private var pageNo = 0 // 0 = single-file form; >0 = the page cursor
   private var exhausted = false
@@ -216,15 +237,14 @@ private class InsightsPartitionReader(
     }
     val content = scala.io.Source.fromFile(f)
     val page = try content.getLines().toVector finally content.close()
-    page.find(_.trim.nonEmpty).foreach { first =>
-      val node = mapper.readTree(first)
-      val err = node.get("error")
-      if (err != null && !err.isNull)
-        throw AdsApiError(
-          Option(err.get("code")).map(_.asInt).getOrElse(-1),
-          Option(err.get("type")).map(_.asText).getOrElse("Unknown"),
-          Option(err.get("message")).map(_.asText).getOrElse("Unknown error"))
-    }
+    for {
+      first <- page.find(_.trim.nonEmpty)
+      node <- Try(mapper.readTree(first)).toOption
+      err <- Option(node.get("error")) if !err.isNull
+    } throw AdsApiError(
+      Option(err.get("code")).map(_.asInt).getOrElse(-1),
+      Option(err.get("type")).map(_.asText).getOrElse("Unknown"),
+      Option(err.get("message")).map(_.asText).getOrElse("Unknown error"))
     page
   }
 
@@ -256,7 +276,8 @@ private class InsightsPartitionReader(
       val line = lines.next()
       lineNo += 1
       if (line.trim.nonEmpty) {
-        val node = mapper.readTree(line)
+        // unparseable → MissingNode: every raw field reads null
+        val node = Try(mapper.readTree(line)).getOrElse(MissingNode.getInstance)
         if (dateOk(node)) {
           current = convert(node)
           return true

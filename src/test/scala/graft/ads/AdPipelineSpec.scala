@@ -78,6 +78,77 @@ class AdPipelineSpec extends SparkSpec {
     }
   }
 
+  test("a malformed landing-zone line is a rejected row, not a failed sync") {
+    val dir = Files.createTempDirectory("graft-malformed")
+    Seq("a1", "a2").foreach(a => Files.copy(Paths.get(s"$fixtureDir/account_$a.jsonl"),
+      dir.resolve(s"account_$a.jsonl")))
+    // a truncated record as the FIRST line: neither an error body nor a row
+    val a1 = dir.resolve("account_a1.jsonl")
+    Files.write(a1, """{"campaign_name": "camp1", "ad_na""".getBytes("UTF-8") ++
+      "\n".getBytes("UTF-8") ++ Files.readAllBytes(a1))
+    val res = Pipelines.dailySync(spark, dir.toString, Seq("a1", "a2"),
+      s"$dir/table", s"$dir/audit")
+    assert(res.status == "success" && res.rowsProcessed == 5, res.message)
+    assert(res.message.contains("rejected 1 rows"), res.message)
+  }
+
+  test("a paged zone with a missing account runs through dailySync and backfill") {
+    def rec(camp: String, date: String, imps: Int) =
+      s"""{"campaign_name": "$camp", "ad_name": "ad", "publisher_platform": "facebook",
+         | "impressions": "$imps", "date_start": "$date", "date_stop": "$date"}"""
+        .stripMargin.replaceAll("\n", "")
+    val dir = Files.createTempDirectory("graft-paged-zone")
+    def w(name: String, lines: String*) =
+      Files.write(dir.resolve(name), lines.mkString("\n").getBytes("UTF-8"))
+    w("account_p1.page1.jsonl", rec("c1", "2024-03-01", 1), rec("c2", "2024-03-01", 2))
+    w("account_p1.page2.jsonl", rec("c1", "2024-03-01", 99), rec("c3", "2024-03-02", 3))
+    w("account_s1.jsonl", rec("c4", "2024-03-02", 4), rec("c5", "2024-03-09", 5))
+    val accounts = Seq("p1", "gone", "s1")
+    val res = Pipelines.dailySync(spark, dir.toString, accounts, s"$dir/table", s"$dir/audit")
+    assert(res.status == "success" && res.rowsProcessed == 5, res.message)
+    assert(res.message.contains("(failed accounts: gone)"), res.message)
+    // the page-1 record beat its page-2 duplicate
+    assert(Sinks.readTable(spark, s"$dir/table").filter(col("campaign_name") === "c1")
+      .select("impressions").collect().map(_.getLong(0)).toSeq == Seq(1L))
+    // c5 (2024-03-09) is out of range
+    val (_, bf) = Pipelines.backfill(spark, dir.toString, accounts,
+      "2024-03-01", "2024-03-02", s"$dir/out")
+    assert(bf.rowsProcessed == 4, bf.message)
+  }
+
+  test("loadCsv loads the valid rows of a CSV with an empty REQUIRED date_stop") {
+    val dir = Files.createTempDirectory("graft-loadcsv")
+    // inference types date_stop DATE; the empty cell is a null DATE
+    Files.write(dir.resolve("in.csv"), Seq(
+      "campaign_name,ad_name,publisher_platform,impressions,date_start,date_stop",
+      "c1,ad1,facebook,10,2024-03-01,2024-03-01",
+      "c2,ad2,facebook,20,2024-03-02,",
+      "c3,ad3,facebook,30,2024-03-02,2024-03-02").mkString("\n").getBytes("UTF-8"))
+    val res = Pipelines.loadCsv(spark, s"$dir/in.csv", s"$dir/table")
+    assert(res.rowsProcessed == 2, res.message)
+    assert(Sinks.readTable(spark, s"$dir/table").count() == 2)
+  }
+
+  test("dailySync, overwritePartitions and compact leave session conf unchanged") {
+    val s = spark.newSession()
+    val keys = Seq("spark.sql.mapKeyDedupPolicy", "spark.sql.sources.partitionOverwriteMode")
+    val before = keys.map(s.conf.getOption)
+    val table = Files.createTempDirectory("graft-conf").toString + "/table"
+    Pipelines.dailySync(s, fixtureDir, Seq("a1", "a2"), table, s"$table-audit")
+    val read = InsightsSource.read(s, fixtureDir, Seq("a1", "a2"))
+    val flat = AdOps.flattenAndPivot(AdOps.dedupFirstWins(read.data),
+      AdOps.collectActionTypes(read.data))
+    // dynamic overwrite of one day leaves the other days in place
+    Sinks.overwritePartitions(s, flat.filter(col("date_start") === "2024-03-01"), table)
+    Sinks.compact(s, table)
+    assert(keys.map(s.conf.getOption) == before)
+    val t = Sinks.readTable(s, table)
+    assert(t.count() == 5)
+    // last-wins without the conf: ad9's duplicated action reads 9, not 4
+    assert(t.filter(col("ad_name") === "ad9" && col("date_start") === "2024-03-02")
+      .select("novel_metric_v2").collect()(0).getLong(0) == 9L)
+  }
+
   test("backfill: range filter drops out-of-range rows; file named per contract") {
     val out = fresh("backfill_out")
     Files.createDirectories(Paths.get(out))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.types.DoubleType
 import graft.SparkSpec
 
 /** End-to-end golden run of the daily pipeline over a LARGER fixture —
-  * multi-page accounts through the DSv2 reader, cross-account and
+  * multi-page accounts through the (DSv2) insights reader, cross-account and
   * cross-page duplicates, a novel action_type arriving on day 2, and a
   * REQUIRED-column reject — locking the daily → evolve → append → monitor
   * loop against regressions.
@@ -58,7 +58,7 @@ class GoldenPipelineSpec extends SparkSpec {
 
   test("day 1: paged multi-account sync lands the deduped pivoted golden rows") {
     val r = Pipelines.dailySync(spark, writeDay1(), Seq("g1", "g2"),
-      table, s"$work/audit1.csv", useV2Source = true)
+      table, s"$work/audit1.csv")
     assert(r.status == "success" && r.rowsProcessed == 4)
     val t = Sinks.readTable(spark, table)
     // pivot columns exist for every observed (normalized) action type
@@ -84,7 +84,7 @@ class GoldenPipelineSpec extends SparkSpec {
 
   test("day 2: novel action evolves the schema; REQUIRED reject is reported") {
     val r = Pipelines.dailySync(spark, writeDay2(), Seq("g1"),
-      table, s"$work/audit2.csv", useV2Source = true)
+      table, s"$work/audit2.csv")
     assert(r.rowsProcessed == 2, r.message)
     assert(r.message.contains("rejected 1 rows") &&
       r.message.contains("campaign_name: null value for REQUIRED column"), r.message)

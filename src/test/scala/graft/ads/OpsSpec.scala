@@ -71,10 +71,11 @@ class OpsSpec extends SparkSpec {
     // per (record, type), zero-filled elsewhere)
     val pivotSum = flat.select(types.map(t =>
       sum(col(AdOps.normalizeActionName(t))).as(t)): _*).collect()(0)
-    val rawLastWins = raw.select(explode(expr(
-      "map_entries(map_from_entries(transform(actions, a -> struct(a.action_type, a.value))))"
-    )).as("e"))
-      .select(col("e.key").as("t"), col("e.value").cast("long").as("v"))
+    // oracle: per (record, type) the entry at the highest array position
+    val rawLastWins = raw.withColumn("rid", monotonically_increasing_id())
+      .select(col("rid"), posexplode(col("actions")).as(Seq("pos", "a")))
+      .groupBy(col("rid"), col("a.action_type").as("t"))
+      .agg(max_by(col("a.value"), col("pos")).cast("long").as("v"))
       .groupBy("t").agg(sum("v").as("s"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     types.zipWithIndex.foreach { case (t, i) =>

@@ -2,15 +2,19 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.ads.{AdOps, Fixtures, InsightsSource}
+import graft.ads.{AdOps, AdSchema, Fixtures, InsightsSource}
 
 class InsightsV2SourceSpec extends SparkSpec {
 
   private lazy val fixtureDir = Fixtures.write()
 
   test("V2 source returns the same rows as the driver-side JSON read") {
-    val v1 = InsightsSource.read(spark, fixtureDir, Seq("a1", "a2")).data
-    val v2 = InsightsSource.readV2(spark, fixtureDir, Seq("a1", "a2"))
+    // oracle: Spark's built-in JSON reader, one file per account, unioned
+    val v1 = Seq("a1", "a2").zipWithIndex.map { case (a, i) =>
+      spark.read.schema(AdSchema.rawSchema).json(s"$fixtureDir/account_$a.jsonl")
+        .withColumn("account_id", lit(a)).withColumn("account_idx", lit(i))
+    }.reduce(_ unionByName _)
+    val v2 = InsightsSource.read(spark, fixtureDir, Seq("a1", "a2")).data
     assert(v2.count() == v1.count())
     val key = Seq("campaign_name", "ad_name", "date_start", "publisher_platform",
       "impressions", "account_id", "account_idx", "ingest_idx")
@@ -19,8 +23,8 @@ class InsightsV2SourceSpec extends SparkSpec {
   }
 
   test("column pruning and date filters are pushed into the reader") {
-    val pruned = InsightsSource.readV2(spark, fixtureDir, Seq("a1", "a2"),
-      dateStart = Some("2024-03-01"), dateStop = Some("2024-03-02"))
+    val pruned = InsightsSource.read(spark, fixtureDir, Seq("a1", "a2"),
+      dateStart = Some("2024-03-01"), dateStop = Some("2024-03-02")).data
       .select("campaign_name", "date_start")
     val plan = pruned.queryExecution.executedPlan.toString
     // the between bounds must be ABSENT as plan-side filters (they were
@@ -33,13 +37,13 @@ class InsightsV2SourceSpec extends SparkSpec {
     // the out-of-range 2024-03-09 record never leaves the reader
     assert(pruned.count() == 6)
     // full pipeline over the V2 source: dedup + pivot still work
-    val deduped = AdOps.dedupFirstWins(InsightsSource.readV2(
-      spark, fixtureDir, Seq("a1", "a2")))
+    val deduped = AdOps.dedupFirstWins(InsightsSource.read(
+      spark, fixtureDir, Seq("a1", "a2")).data)
     assert(deduped.count() == 5)
   }
 
   test("each account is its own input partition") {
-    val v2 = InsightsSource.readV2(spark, fixtureDir, Seq("a1", "a2"))
+    val v2 = InsightsSource.read(spark, fixtureDir, Seq("a1", "a2")).data
     assert(v2.rdd.getNumPartitions == 2)
   }
 
@@ -76,21 +80,21 @@ class InsightsV2SourceSpec extends SparkSpec {
   }
 
   test("pages are walked in cursor order with a continuous ingest index") {
-    val rows = InsightsSource.readV2(spark, pagedDir(), Seq("pg"))
+    val rows = InsightsSource.read(spark, pagedDir(), Seq("pg")).data
       .select("campaign_name", "ingest_idx").collect()
       .map(r => (r.getString(0), r.getLong(1))).sortBy(_._2)
     assert(rows.toSeq == Seq(("c1", 0L), ("c2", 1L), ("c3", 2L), ("c4", 3L)))
   }
 
   test("an empty page stops the cursor walk (later pages are not read)") {
-    val camps = InsightsSource.readV2(spark, pagedDir(), Seq("es"))
+    val camps = InsightsSource.read(spark, pagedDir(), Seq("es")).data
       .select("campaign_name").collect().map(_.getString(0)).toSet
     assert(camps == Set("e1"), s"page past the empty one was read: $camps")
   }
 
   test("transient failures are retried up to 3 attempts and recover") {
     val dir = pagedDir()
-    val rows = InsightsSource.readV2(spark, dir, Seq("tr")).collect()
+    val rows = InsightsSource.read(spark, dir, Seq("tr")).data.collect()
     assert(rows.length == 1)
     val marker = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$dir/account_tr.page1.jsonl.transient"))).trim
@@ -99,17 +103,38 @@ class InsightsV2SourceSpec extends SparkSpec {
 
   test("persistent transient failure surfaces after 3 attempts") {
     val e = intercept[Exception] {
-      InsightsSource.readV2(spark, pagedDir(), Seq("tx")).collect()
+      InsightsSource.read(spark, pagedDir(), Seq("tx")).data.collect()
     }
     def chain(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => x.getMessage +: chain(x.getCause))
     assert(chain(e).exists(_.contains("failed after 3 attempts")), s"got: ${chain(e)}")
   }
 
+  test("unparseable lines, even a first line, read as null raw rows with lineage set") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bad").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/account_bd.page1.jsonl"),
+      Seq("""{"campaign_name": "cut""", rec("b1", "2024-03-01"), "{oops")
+        .mkString("\n").getBytes("UTF-8"))
+    // "zz" has no file: skipped, and bd keeps its list position as account_idx
+    val read = InsightsSource.read(spark, dir, Seq("zz", "bd"))
+    assert(read.failedAccounts.map(_._1) == Seq("zz"))
+    val rows = read.data
+      .select("campaign_name", "date_start", "account_id", "account_idx", "ingest_idx")
+      .collect().map(r => (Option(r.getString(0)), Option(r.getString(1)),
+        r.getString(2), r.getInt(3), r.getLong(4))).sortBy(_._5)
+    assert(rows.toSeq == Seq(
+      (None, None, "bd", 1, 0L),
+      (Some("b1"), Some("2024-03-01"), "bd", 1, 1L),
+      (None, None, "bd", 1, 2L)))
+    // a ranged read drops them: their date_start is null
+    assert(InsightsSource.read(spark, dir, Seq("bd"), dateStop = Some("2024-03-05"))
+      .data.count() == 1)
+  }
+
   test("token errors (190) are fatal: classified and never retried") {
     val dir = pagedDir()
     val e = intercept[Exception] {
-      InsightsSource.readV2(spark, dir, Seq("ft")).collect()
+      InsightsSource.read(spark, dir, Seq("ft")).data.collect()
     }
     def chain(t: Throwable): Seq[Throwable] =
       Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
